@@ -500,9 +500,11 @@ def q_crawl_round_log(spark, sf_dir):
     from ccrawler_spark import testing as tt
     from ccrawler_spark.fixtures.gen import FIXTURE_ROOT
 
-    # fixed store path, recreated per call (ADVICE r7: the previous
-    # mkdtemp leaked a full 2-round engine store per gate invocation)
-    out = FIXTURE_ROOT / "gate-crawl-store"
+    # one store path per process, recreated per call: a repeat call
+    # reuses it (a mkdtemp per call leaked a full 2-round engine store
+    # each time, ADVICE r7) and concurrent gate processes cannot delete
+    # each other's live store
+    out = FIXTURE_ROOT / f"gate-crawl-store-{os.getpid()}"
     shutil.rmtree(out, ignore_errors=True)
     _, store, _ = tt.engine_run(spark, "tiny", str(out), rounds=2)
     return store.read_fetch_log(2).select(

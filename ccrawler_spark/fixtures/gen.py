@@ -260,17 +260,6 @@ def ensure_corpus_layout(spark, fdir) -> pathlib.Path:
         meta = read_layout_meta(str(out))
         if (meta is not None and meta.get("buckets") == 64
                 and meta.get("cluster_keys") == CLUSTER_KEYS):
-            if "wide_host_keys" not in meta:
-                # backfill (sound: the footers ARE the source) for
-                # layouts cached before the wide-host list existed
-                from ccrawler_spark.io.corpus_layout import (
-                    wide_host_keys_from_footers, write_layout_meta,
-                )
-
-                write_layout_meta(
-                    str(out), 64, meta.get("row_group_bytes"),
-                    wide_host_keys_from_footers(str(out)),
-                )
             return out
         # stale cache (pre-metadata, or clustered on old keys): rebuild
         (fdir / "_LAYOUT_DONE").unlink()

@@ -1,18 +1,16 @@
-"""Set-based pruned corpus scan: a pyarrow reader behind ``mapInArrow``
-that breaks the 4,096-value id-pushdown cap (VERDICT r5 #2).
+"""Host-scoped pruned corpus scan: a pyarrow reader behind
+``mapInArrow`` — the engine's one pruned read of the corpus layout for
+the fetch join (io/corpus_layout; engine._corpus_side).
 
-Why this exists: Spark's parquet datasource expands an ``IN`` filter
-above ``spark.sql.parquet.pushdown.inFilterThreshold`` into a left-deep
-``Or`` tree; at ~10k values the JVM overflows its stack evaluating it
-(measured r5 negative result — docs/SCALING.md round 5 #2), so the
-JVM pruned read (io/corpus_layout.pruned_corpus) caps id-level
-skipping at ``ID_PUSHDOWN_CAP = 4096``. That cap sits exactly below
-the design-scale sweet spot (round budget K ≈ 10⁵ over a 10¹⁰-row
-corpus). This reader evaluates set membership the obvious way — a
-sorted list + bisect per row-group statistic, a hash-set ``is_in``
-kernel per value vector — with zero expression recursion, so the cap
-rises to ``ARROW_PUSHDOWN_CAP`` (128k) limited only by the broadcast
-size of the key sets (a few MB).
+Why not a JVM ``IN`` filter: Spark's parquet datasource expands a
+pushed ``IN`` list into a left-deep ``Or`` tree, and evaluating it
+overflows the JVM stack at a few thousand values (docs/SCALING.md
+round 5 #2: failures reproduced from 2,611 ids at local[4]). This
+reader evaluates set membership the obvious way — a sorted list +
+bisect per row-group statistic, a hash-set ``is_in`` kernel per value
+vector — with zero expression recursion, so it is bounded only by
+``ARROW_PUSHDOWN_CAP`` (128k), the broadcast size of the key sets (a
+few MB).
 
 Execution shape (all distributed, nothing driver-side but the file
 list):
@@ -22,9 +20,8 @@ list):
   only those directories' files enter the scan;
 - **row-group skipping** — each task reads its files' FOOTERS and
   keeps a row group only if some scheduled host_key lands in its
-  [min,max] AND (when ids are pushed) some scheduled image_id lands in
-  its id range — the same admission rule the JVM reader applies, minus
-  the Or tree (bisect over the sorted key list, O(log n) per group);
+  [min,max] AND one of *that host's* scheduled image_ids lands in its
+  id range (bisect over sorted key lists, O(log n) per group);
 - **exact residual filter** — admitted groups are read via
   ``read_row_groups`` and filtered with vectorized ``pc.is_in``
   (hash-set semijoin in Arrow C++), so the rows crossing into the JVM
@@ -35,7 +32,7 @@ list):
   zero-copy).
 
 The result is identical to ``spark.read.parquet(layout)`` filtered by
-the same predicates — pinned by tests/test_corpus_layout.py byte
+the scheduled ids — pinned by tests/test_corpus_layout.py byte
 equality and the ``pruned_corpus_read`` driver gate (DuckDB twin over
 the flat corpus).
 """
@@ -53,40 +50,35 @@ from ccrawler_spark.io.corpus_layout import (
 
 # the set-based pushdown bound: above this the broadcast key set stops
 # being "schedule metadata" (128k ids ≈ 2 MB pickled) and the engine
-# falls back to host-only / wide-split JVM pruning. Tests override the
-# engine's copy (CrawlEngine.arrow_pushdown_cap); physical planning
-# only — results identical either way.
+# reads the layout with bucket pruning only. Physical planning only —
+# results identical either way; tests monkeypatch it to pin a regime.
 ARROW_PUSHDOWN_CAP = 131072
 
 
 def pruned_corpus_arrow(
     spark: SparkSession,
     path: str,
-    hosts=None,
-    ids=None,
-    host_ids=None,
+    host_ids,
     track: list | None = None,
 ) -> DataFrame:
-    """Layout scan with set-based host/id pushdown (module docstring).
-    Semantics match :func:`ccrawler_spark.io.corpus_layout
-    .pruned_corpus` exactly: sound for the fetch join (pruning can
-    only drop rows that cannot match any scheduled row), output schema
-    identical to ``spark.read.parquet(path)`` (data columns + the
-    ``host_bucket`` partition column).
+    """Layout scan restricted to the scheduled (host → image_ids)
+    pairing ``host_ids`` (module docstring). Sound for the fetch join
+    (pruning can only drop rows that cannot match any scheduled row);
+    output schema identical to ``spark.read.parquet(path)`` (data
+    columns + the ``host_bucket`` partition column).
 
-    ``host_ids`` (dict host → iterable of its scheduled image_ids)
-    supersedes ``hosts``/``ids`` and enables HOST-SCOPED id admission:
-    a row group is kept only if some scheduled host's key lands in its
-    [min,max] AND one of *that host's* ids lands in its id range. The
-    global AND (host-set ∧ id-set) admits a group whenever ANY of the
-    K scheduled ids falls in its id range — at K ≈ 10⁴⁺ nearly every
-    range does, so global-id skipping decays to host-only touch
-    (measured r6: 556 vs 385 groups on the sparse bench schedule).
-    Scoping the id test to the ≤ per_host_k ids of the group's own
-    hosts keeps the admission probability flat as K grows. Sound
-    because a scheduled corpus row (h, i) can only sit in a group
-    whose host_key range covers key(h) — so testing i against groups
-    admitted via key(h) covers every row the fetch join could match.
+    Admission is HOST-SCOPED: a row group is kept only if some
+    scheduled host's key lands in its [min,max] AND one of *that
+    host's* ids lands in its id range. A global AND (host-set ∧
+    id-set) would admit a group whenever ANY of the K scheduled ids
+    falls in its id range — at K ≈ 10⁴⁺ nearly every range does, so
+    id skipping would decay to host-only touch (measured r6: 556 vs
+    385 groups on the sparse bench schedule). Scoping the id test to
+    the ≤ per_host_k ids of the group's own hosts keeps the admission
+    probability flat as K grows. Sound because a scheduled corpus row
+    (h, i) can only sit in a group whose host_key range covers key(h)
+    — so testing i against groups admitted via key(h) covers every row
+    the fetch join could match.
 
     ``track``: optional list the key-set broadcast is appended to, so
     the caller can ``unpersist()`` it once the round's actions complete
@@ -97,11 +89,9 @@ def pruned_corpus_arrow(
 
     Scope note (ADVICE r6): the file list comes from a driver-side
     ``pathlib`` glob, so this reader requires the layout root on a
-    locally-mounted filesystem (true in this sandbox and for
-    NFS/FUSE-mounted stores). On an object store the engine's JVM
-    ``pruned_corpus`` path — which lists through the Hadoop filesystem
-    — remains the fallback; a pyarrow.dataset/fsspec listing would
-    lift the constraint without changing any semantics."""
+    locally-mounted filesystem (local disk, NFS/FUSE mounts). An
+    object-store layout needs a pyarrow.dataset/fsspec listing here;
+    it would change no semantics."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -113,26 +103,20 @@ def pruned_corpus_arrow(
             "written with"
         )
     b = int(meta["buckets"])
-    if host_ids is not None:
-        hosts = set(host_ids)
-        ids = {i for v in host_ids.values() for i in v}
-    keys = (sorted(host_key_py(h, b) for h in hosts)
-            if hosts is not None else None)
-    ids_l = sorted(ids) if ids is not None else None
-    ids_by_key = None
-    if host_ids is not None:
-        ids_by_key = {}
-        for h, v in host_ids.items():  # merge hash-colliding hosts
-            ids_by_key.setdefault(host_key_py(h, b), []).extend(v)
-        ids_by_key = {k: sorted(v) for k, v in ids_by_key.items()}
+    ids_by_key: dict[int, list] = {}
+    for h, v in host_ids.items():  # merge hash-colliding hosts
+        ids_by_key.setdefault(host_key_py(h, b), []).extend(v)
+    ids_by_key = {k: sorted(v) for k, v in ids_by_key.items()}
+    keys = sorted(ids_by_key)
+    ids_l = sorted({i for v in ids_by_key.values() for i in v})
     root = pathlib.Path(path)
     # bucket partition pruning, driver-side from the directory names —
     # the bucket IS the key's top 7 bits, so no separate bucket list
-    sel = {k >> 57 for k in keys} if keys is not None else None
+    sel = {k >> 57 for k in keys}
     files = []
     for bdir in sorted(root.glob("host_bucket=*")):
         bk = int(bdir.name.split("=", 1)[1])
-        if sel is not None and bk not in sel:
+        if bk not in sel:
             continue
         files.extend((str(pf), bk) for pf in sorted(bdir.glob("*.parquet")))
 
@@ -168,8 +152,8 @@ def pruned_corpus_arrow(
         import pyarrow.parquet as pq
 
         keys_l, idsv, by_key = bc.value
-        key_arr = pa.array(keys_l, pa.int64()) if keys_l is not None else None
-        id_arr = pa.array(idsv, pa.string()) if idsv is not None else None
+        key_arr = pa.array(keys_l, pa.int64())
+        id_arr = pa.array(idsv, pa.string())
 
         def admits(srt, st):
             # absent stats cannot prove a skip — keep the group
@@ -208,34 +192,17 @@ def pruned_corpus_arrow(
                     md.row_group(0).column(i).path_in_schema: i
                     for i in range(md.row_group(0).num_columns)
                 }
-                groups = []
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    if by_key is not None:
-                        if not admits_scoped(g):
-                            continue
-                        groups.append(rg)
-                        continue
-                    if keys_l is not None and not admits(
-                        keys_l, g.column(cols["host_key"]).statistics
-                    ):
-                        continue
-                    if idsv is not None and not admits(
-                        idsv, g.column(cols["image_id"]).statistics
-                    ):
-                        continue
-                    groups.append(rg)
+                groups = [
+                    rg for rg in range(md.num_row_groups)
+                    if admits_scoped(md.row_group(rg))
+                ]
                 if not groups:
                     continue
                 t = f.read_row_groups(groups)
-                mask = None
-                if key_arr is not None:
-                    mask = pc.is_in(t.column("host_key"), value_set=key_arr)
-                if id_arr is not None:
-                    m2 = pc.is_in(t.column("image_id"), value_set=id_arr)
-                    mask = m2 if mask is None else pc.and_(mask, m2)
-                if mask is not None:
-                    t = t.filter(mask)
+                t = t.filter(pc.and_(
+                    pc.is_in(t.column("host_key"), value_set=key_arr),
+                    pc.is_in(t.column("image_id"), value_set=id_arr),
+                ))
                 if t.num_rows == 0:
                     continue
                 t = t.append_column(

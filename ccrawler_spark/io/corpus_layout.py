@@ -20,11 +20,10 @@ that structure physical:
 - **clustered** (sorted within files) **by (host_key, image_id)**
   where host_key is the bucket-prefixed numeric key (CLUSTER_KEYS
   comment) — parquet row-group min/max statistics on ``host_key``
-  become tight disjoint ranges, so a pushed-down ``host_key IN
-  (scheduled keys)`` filter skips every row group of unscheduled
-  hosts; within a big host's run the ``image_id`` stats are sorted
-  ranges too, so a pushed ``image_id IN (...)`` additionally skips
-  cold id ranges when the fetch batch is small;
+  become tight disjoint ranges, so a scan restricted to the scheduled
+  keys skips every row group of unscheduled hosts; within a big host's
+  run the ``image_id`` stats are sorted ranges too, so the scheduled
+  ids additionally skip cold id ranges;
 - **small-ish row groups** (``row_group_bytes``) — the skipping
   granularity; at design scale with ~100 KB images the default 128 MB
   row group holds ~10^3 rows, which is already fine — the knob matters
@@ -32,9 +31,13 @@ that structure physical:
 
 Writing the layout is a one-time (or periodic, post-compaction) Spark
 job — exactly the kind of table-maintenance job an Iceberg warehouse
-runs anyway (rewrite_data_files with a sort order); the pruned read
-path is plain ``spark.read.parquet`` + pushable filters, nothing
-custom, so Catalyst/Parquet do the skipping.
+runs anyway (rewrite_data_files with a sort order). The engine reads
+it one of two ways (engine._corpus_side): a schedule of at most
+``io/arrow_scan.ARROW_PUSHDOWN_CAP`` rows goes through the host-scoped
+set-membership scan ``io/arrow_scan.pruned_corpus_arrow``; a larger
+one through :func:`pruned_corpus` with bucket partition pruning only.
+Neither pushes a JVM ``IN`` list, whose ``Or`` tree overflows the JVM
+stack at a few thousand values (docs/SCALING.md round 5 #2).
 
 Dense-schedule regime (the bench conf fetches ~20% of the corpus per
 round, touching every host): the filters select everything, parquet
@@ -77,13 +80,6 @@ META_FILE = "_layout_meta.json"
 # lexicographic order IS its numeric order — within a host's sorted run
 # the id stats are tight.
 CLUSTER_KEYS = ["host_bucket", "host_key.bp2", "image_id"]
-
-# pushdown caps (physical planning only — results are identical with or
-# without pruning, so these are module constants, not CrawlConf fields):
-# above these cardinalities the IN-literal lists stop paying for their
-# plan-side cost and the engine falls back to bucket-only pruning
-HOST_PUSHDOWN_CAP = 1024
-ID_PUSHDOWN_CAP = 4096
 
 # sandbox default: bench corpus rows are ~400 B, so 2 MiB row groups
 # ≈ 5k rows — fine enough for host-level skipping to show. At design
@@ -163,60 +159,10 @@ def write_corpus_layout(
         for f in df.schema.fields if f.name != "host_bucket"
     ])
     write_layout_meta(path, buckets, row_group_bytes,
-                      wide_host_keys_from_footers(path),
                       data_schema=_json.loads(data_schema.json()))
 
 
-WIDE_MIN_GROUPS = 8  # a host whose sorted run spans ≥ this many row
-# groups is "wide": its groups' host_key stats are [k, k] and only an
-# image_id filter can skip inside the run. The layout records wide
-# hosts' keys in the metadata sidecar (bounded: ≤ total_groups / 8
-# entries, i.e. only the Zipf head) so the reader can plan a two-scan
-# split — narrow hosts host-pruned, wide hosts host+id-pruned — when
-# the full schedule's id set exceeds ID_PUSHDOWN_CAP but the wide
-# hosts' share fits.
-
-
-def wide_host_keys_from_footers(path: str) -> list[int]:
-    """Wide-host keys from the layout's parquet footers: keys that are
-    both min and max of ≥ WIDE_MIN_GROUPS row groups (single-host
-    groups — the inside of a sorted run). Driver-side pyarrow pass
-    here (≈0.5 s per 10⁴ groups); at warehouse scale this is a
-    distributed metadata job over the manifest, run by the same
-    maintenance job that writes the layout."""
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-
-    runs: Counter = Counter()
-    for pf in pathlib.Path(path).glob("host_bucket=*/*.parquet"):
-        md = pq.ParquetFile(pf).metadata
-        if md.num_row_groups == 0:
-            continue  # zero-row-group file (empty write): nothing to scan
-        ki = next(
-            i for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "host_key"
-        )
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ki).statistics
-            # absent stats (writer with stats disabled) degrade to "no
-            # wide hosts seen here", never a crash (ADVICE r5)
-            if st is None or st.min is None or st.max is None:
-                continue
-            if st.min == st.max:
-                runs[st.min] += 1
-    return sorted(k for k, c in runs.items() if c >= WIDE_MIN_GROUPS)
-
-
-def split_hosts_by_width(meta: dict, hosts) -> tuple[set, set]:
-    """(narrow, wide) partition of scheduled hosts against the layout
-    metadata's wide-host key list."""
-    wide_keys = set(meta.get("wide_host_keys", []))
-    b = int(meta["buckets"])
-    wide = {h for h in hosts if host_key_py(h, b) in wide_keys}
-    return set(hosts) - wide, wide
-
-
+# Not planned by the engine; kept while perfbench/tracing.py still wraps it.
 def pruned_corpus_split(
     spark: SparkSession,
     path: str,
@@ -268,7 +214,6 @@ def host_key_py(host: str, buckets: int) -> int:
 
 def write_layout_meta(path: str, buckets: int,
                       row_group_bytes: int | None,
-                      wide_host_keys: list[int] | None = None,
                       data_schema: dict | None = None) -> None:
     """``data_schema`` (Spark StructType JSON of the data columns, i.e.
     everything but the ``host_bucket`` partition column) lets the arrow
@@ -276,8 +221,7 @@ def write_layout_meta(path: str, buckets: int,
     parquet footer read (VERDICT r6 #4); layouts written before this
     field fall back to the footer."""
     meta = {"buckets": int(buckets), "cluster_keys": CLUSTER_KEYS,
-            "row_group_bytes": row_group_bytes,
-            "wide_host_keys": [int(k) for k in (wide_host_keys or [])]}
+            "row_group_bytes": row_group_bytes}
     if data_schema is not None:
         meta["data_schema"] = data_schema
     (pathlib.Path(path) / META_FILE).write_text(json.dumps(meta))
@@ -334,7 +278,9 @@ def pruned_corpus(
     (row-group skipping via the layout's sorted min/max stats). All
     three prunings are sound for the fetch join — a corpus row outside
     the scheduled (bucket, host, id) sets cannot match any scheduled
-    row — so results are identical to the flat scan."""
+    row — so results are identical to the flat scan. The engine passes
+    ``buckets`` only: a pushed IN list of a few thousand values
+    overflows the JVM stack (module docstring)."""
     df = spark.read.parquet(path)
     if buckets is not None:
         df = df.filter(F.col("host_bucket").isin([int(b) for b in buckets]))

@@ -48,7 +48,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-MANIFEST_FMT = "manifest-{n:06d}.json"
+from ccrawler_spark.io.snapshot import MANIFEST_FMT, _round_of
 
 
 @dataclass
@@ -60,10 +60,6 @@ class _FilePartition(InputPartition):
     # (many small files) dispatch-bound.
     files: tuple
     remove_specs: tuple  # ((dir_path, rr), ...) shared by all partitions
-
-
-def _round_of(path: str) -> int:
-    return int(str(path).rsplit("-r", 1)[1])
 
 
 def _plan_files(root: str, n: int | None):

@@ -47,6 +47,13 @@ from ccrawler_spark.conf import CrawlConf
 MANIFEST_FMT = "manifest-{n:06d}.json"
 
 
+def _round_of(path: str) -> int:
+    """Data-file sequence number from the path name (base-r{n} /
+    adds-r{n} / removes-r{n}) — the Iceberg-v2 sequence-number
+    analogue that scopes equality-deletes."""
+    return int(str(path).rsplit("-r", 1)[1])
+
+
 class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str | os.PathLike, conf: CrawlConf,
                  compact_threshold: int = 8):
@@ -102,13 +109,6 @@ class SnapshotStore:
             fr["base"], fr["adds"], fr["removes"], fr.get("small_removes", True)
         )
 
-    @staticmethod
-    def _round_of(path: str) -> int:
-        """Data-file sequence number from the path name (base-r{n} /
-        adds-r{n} / removes-r{n}) — the Iceberg-v2 sequence-number
-        analogue that scopes equality-deletes."""
-        return int(str(path).rsplit("-r", 1)[1])
-
     def read_frontier_from(
         self,
         base: str,
@@ -131,7 +131,7 @@ class SnapshotStore:
 
         def tagged(path: str) -> DataFrame:
             return self.spark.read.parquet(self.data_path(path)).withColumn(
-                "_ar", F.lit(self._round_of(path))
+                "_ar", F.lit(_round_of(path))
             )
 
         df = reduce(DataFrame.unionByName, [tagged(p) for p in [base, *adds]])
@@ -140,7 +140,7 @@ class SnapshotStore:
                 DataFrame.unionByName,
                 [
                     self.spark.read.parquet(self.data_path(p)).withColumn(
-                        "_rr", F.lit(self._round_of(p))
+                        "_rr", F.lit(_round_of(p))
                     )
                     for p in removes
                 ],
@@ -256,11 +256,12 @@ class SnapshotStore:
         # thread-local, so each overlapped pool write is attributed
         # correctly in the UI / event log
         sc = df.sparkSession.sparkContext
+        caller_desc = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription("store write: " + "/".join(parts))
         try:
             w.parquet(path)
         finally:
-            sc.setJobDescription(None)
+            sc.setJobDescription(caller_desc)
         return str(pathlib.Path(*parts))
 
     # --------------------------------------------------------------- gc

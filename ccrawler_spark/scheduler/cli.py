@@ -76,12 +76,6 @@ def build_session(cores: int, shuffle_partitions: int | None = None,
         # expose enough tasks for the largest local[N] we bench
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        # keep large IN filters pushed to parquet as exact value sets
-        # (above the default threshold of 10 Spark degrades them to a
-        # [min,max] range, useless for hash-scattered hosts/ids) — the
-        # pruned fetch path pushes up to HOST/ID_PUSHDOWN_CAP literals
-        # against the sorted corpus layout (io/corpus_layout)
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "4096")
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .getOrCreate()

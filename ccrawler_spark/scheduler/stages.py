@@ -214,8 +214,10 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
     branch ranks the whole schedule in a single-partition window over
     the SAME total key, producing identical seq values (row_number
     over a total order ≡ group prefix-sum over its prefix groups);
-    the engine gates it on conf.round_budget ≤ ID_PUSHDOWN_CAP, the
-    same static bound the schedule-metadata collect uses.
+    the engine gates it on conf.round_budget ≤ SMALL_ROUND_ROWS, the
+    same static bound the schedule-metadata collect uses. Both
+    branches end in the same select, so the output columns
+    (scheduled's, then seq, round) do not depend on the regime.
 
     Distributed global ranking as a deterministic group prefix-sum:
     rows are grouped on (slot_ms, host_bucket) — a *prefix* of the
@@ -234,6 +236,7 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
     B) ≪ K, so it broadcasts. Group sizes are ~|hosts scheduled at
     that slot| / B — naturally balanced, no hot key.
     """
+    out_cols = [*scheduled.columns, "seq", "round"]
     if small_budget:
         w_all = Window.partitionBy(F.lit(0)).orderBy(*SEQ_KEY)
         return (
@@ -243,6 +246,7 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
                 .cast("long"),
             )
             .withColumn("round", F.lit(round_no))
+            .select(*out_cols)
         )
     counts = scheduled.groupBy(*SEQ_GROUP).count()
     # single-partition window — intentional: its input is the AGGREGATED
@@ -270,8 +274,8 @@ def with_fetch_sequence(scheduled: DataFrame, round_no: int, seq_offset: int,
             (F.row_number().over(w) - 1 + F.col("_goff") + F.lit(seq_offset))
             .cast("long"),
         )
-        .drop("_goff")
         .withColumn("round", F.lit(round_no))
+        .select(*out_cols)
     )
 
 

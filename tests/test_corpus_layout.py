@@ -199,34 +199,22 @@ def test_engine_parity_layout_recrawl(spark, tiny_fixtures, layout_dir):
     )
 
 
-def test_wide_host_split_pruning(spark, tiny_fixtures):
-    """r5 two-scan split: the layout metadata records wide hosts (runs
-    spanning ≥ WIDE_MIN_GROUPS row groups); a schedule whose full id
-    set exceeds the pushdown cap can still push the wide hosts' ids on
-    a second scan. Values must equal the flat corpus rows of the
-    scheduled hosts (with the wide host restricted to scheduled ids)."""
+def test_wide_host_split_pruning(spark, tiny_fixtures, layout_dir):
+    """Two-scan split (pruned_corpus_split): narrow hosts are read with
+    host pruning only, wide hosts are additionally restricted to their
+    scheduled ids. Given explicit narrow and wide host sets, the values
+    must equal the flat corpus rows of the narrow hosts plus the wide
+    host's scheduled ids."""
     from ccrawler_spark.fixtures.gen import universe_urls_df
     from ccrawler_spark.functions.hashing import umod, xxhash64_str
     from ccrawler_spark.functions.spark_exprs import image_id_of
-    from ccrawler_spark.io.corpus_layout import (
-        host_key_py, pruned_corpus_split, read_layout_meta,
-        split_hosts_by_width, write_corpus_layout,
-    )
+    from ccrawler_spark.io.corpus_layout import pruned_corpus_split
 
-    out = tempfile.mkdtemp(prefix="layout-wide-") + "/layout"
-    corpus = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
     url_map = universe_urls_df(spark, str(tiny_fixtures)).select(
         image_id_of(F.col("url")).alias("image_id"), "host"
     )
-    # tiny row groups -> the Zipf-head host h0 spans many groups
-    write_corpus_layout(corpus, url_map, out, row_group_bytes=8 * 1024)
-    meta = read_layout_meta(out)
-    assert meta["wide_host_keys"], "head host should be wide at 8KiB groups"
-    assert host_key_py("h0.example", 64) in meta["wide_host_keys"]
-
-    sched_hosts = {"h0.example", "h5.example", "h19.example"}
-    narrow, wide = split_hosts_by_width(meta, sched_hosts)
-    assert "h0.example" in wide and "h19.example" in narrow
+    narrow = {"h5.example", "h19.example"}
+    wide = {"h0.example"}  # the Zipf-head host: many pages
 
     # schedule: 5 specific ids of the wide host + all of the narrow ones
     flat = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
@@ -237,7 +225,7 @@ def test_wide_host_split_pruning(spark, tiny_fixtures):
         .select("image_id").limit(5).collect()
     }
     got = pruned_corpus_split(
-        spark, out, narrow_hosts=narrow, wide_hosts=wide,
+        spark, layout_dir, narrow_hosts=narrow, wide_hosts=wide,
         wide_ids=wide_ids,
         buckets_of=lambda h: umod(xxhash64_str(h), 64),
     ).select("image_id", "fmt", "phash")
@@ -253,78 +241,11 @@ def test_wide_host_split_pruning(spark, tiny_fixtures):
     assert n_wide_rows == len(wide_ids)
 
 
-def test_sched_metadata_plans_wide_split(spark, tiny_fixtures, layout_dir):
-    """Engine-side split planning (_sched_metadata): with a large-round
-    conf (budget > ID_PUSHDOWN_CAP) and a host-only pushdown, wide
-    hosts from the layout metadata get their ids collected (free-bound
-    gated) and the plan comes back as the two-scan split dict."""
-    import json
-
-    from ccrawler_spark.conf import CrawlConf
-    from ccrawler_spark.io.corpus_layout import (
-        META_FILE, host_key_py, read_layout_meta,
-    )
-    from ccrawler_spark.scheduler.cli import make_engine
-
-    # force h0 to be "wide" in a copy of the layout's metadata
-    import shutil
-
-    lay = tempfile.mkdtemp(prefix="layout-splitplan-") + "/layout"
-    shutil.copytree(layout_dir, lay)
-    meta = read_layout_meta(lay)
-    meta["wide_host_keys"] = [host_key_py("h0.example", 64)]
-    (pathlib.Path(lay) / META_FILE).write_text(json.dumps(meta))
-
-    out = tempfile.mkdtemp(prefix="splitplan-")
-    conf = CrawlConf(round_budget=8192, per_host_k=64)
-    engine, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf,
-                            corpus_layout=lay)
-    # pin the JVM-split regime: with the set-based arrow scan enabled
-    # (r6 default) this schedule size would plan the arrow path instead
-    engine.arrow_pushdown_cap = 0
-    # > ID_PUSHDOWN_CAP total rows so the full id set cannot push, but
-    # the wide host's share can (free bound |wide| x per_host_k)
-    rows = [
-        (f"h{1 + i % 100}.example", f"{i:016x}", i % 64)
-        for i in range(4100)
-    ] + [("h0.example", f"aa{j:014x}", 7) for j in range(50)]
-    sched = spark.createDataFrame(
-        rows, "host string, image_id string, host_bucket int",
-    )
-    counts, push = engine._sched_metadata(sched)
-    assert sum(counts.values()) == 4150
-    assert "narrow" in push, f"expected split plan, got {push}"
-    assert push["wide"] == {"h0.example"}
-    assert len(push["wide_ids"]) == 50
-    assert "h1.example" in push["narrow"] and "h99.example" in push["narrow"]
-    # and the corpus side builds (plan only) without error
-    df = engine._corpus_side(counts, push)
-    assert "image_id" in df.columns
-
-    # free bound violated (too many wide hosts x per_host_k) -> no split
-    meta["wide_host_keys"] = [
-        host_key_py(f"h{i}.example", 64) for i in range(200)
-    ]
-    (pathlib.Path(lay) / META_FILE).write_text(json.dumps(meta))
-    big = spark.createDataFrame(
-        [(f"h{i % 200}.example", f"{i:016x}", i % 64) for i in range(4200)],
-        "host string, image_id string, host_bucket int",
-    )
-    conf2 = CrawlConf(round_budget=8192, per_host_k=64)
-    engine2, _ = make_engine(spark, str(tiny_fixtures), out, conf=conf2,
-                             corpus_layout=lay)
-    engine2.arrow_pushdown_cap = 0
-    _, push2 = engine2._sched_metadata(big)
-    # host-only plan: 200 wide hosts x 64 = 12,800 ids breaks the bound
-    assert push2 is not None and "narrow" not in push2
-    assert push2["ids"] is None and len(push2["hosts"]) == 200
-
-
 def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
-    """r6 set-based reader (io/arrow_scan): for the same (hosts, ids)
-    predicates, pruned_corpus_arrow must return exactly the JVM pruned
-    scan's rows — and both must equal the flat corpus filtered by id —
-    in every mode (hosts+ids, hosts-only, ids-only)."""
+    """Set-based reader (io/arrow_scan): for a (host → ids) schedule,
+    pruned_corpus_arrow must return exactly the JVM pruned scan's rows
+    for the same hosts and ids, both must equal the flat corpus
+    filtered by id, and its schema must match the layout's."""
     from ccrawler_spark.fixtures.gen import universe_urls_df
     from ccrawler_spark.functions.spark_exprs import image_id_of
     from ccrawler_spark.io.arrow_scan import pruned_corpus_arrow
@@ -333,53 +254,37 @@ def test_arrow_scan_matches_jvm_and_flat(spark, tiny_fixtures, layout_dir):
     url_map = universe_urls_df(spark, str(tiny_fixtures)).select(
         image_id_of(F.col("url")).alias("image_id"), "host"
     )
-    hosts = {"h0.example", "h5.example", "h19.example"}
-    ids = {
-        r["image_id"]
-        for r in url_map.filter(F.col("host").isin(sorted(hosts)))
-        .select("image_id").limit(40).collect()
-    }
-    cols = ["image_id", "fmt", "phash", "host_bucket"]
-    for kw in ({"hosts": hosts, "ids": ids}, {"hosts": hosts},
-               {"ids": ids}):
-        a = pruned_corpus_arrow(spark, layout_dir, **kw).select(*cols)
-        j = pruned_corpus(spark, layout_dir, **kw).select(*cols)
-        assert _sorted_rows(a) == _sorted_rows(j), f"mode {set(kw)}"
-    # host-scoped mode (the engine's arrow plan): the (host → ids)
-    # pairing must return exactly the global hosts+ids rows — scoping
-    # only sharpens row-group SKIPPING, never the row set
     pair_rows = url_map.filter(
-        F.col("host").isin(sorted(hosts))
-        & F.col("image_id").isin(sorted(ids))
-    ).collect()
+        F.col("host").isin("h0.example", "h5.example", "h19.example")
+    ).limit(40).collect()
     h_ids: dict[str, set] = {}
     for r in pair_rows:
         h_ids.setdefault(r["host"], set()).add(r["image_id"])
-    a = pruned_corpus_arrow(spark, layout_dir, host_ids=h_ids).select(*cols)
-    j = pruned_corpus(spark, layout_dir, hosts=hosts, ids=ids).select(*cols)
-    assert _sorted_rows(a) == _sorted_rows(j), "host-scoped mode"
-    # and the schema is interchangeable with the JVM layout scan
-    assert (
-        pruned_corpus_arrow(spark, layout_dir, hosts=hosts).schema
-        == spark.read.parquet(layout_dir).schema
-    )
-    # ids-only mode equals the flat corpus filtered by id (end-to-end
-    # value proof against the un-laid-out source of truth)
+    ids = {r["image_id"] for r in pair_rows}
+    cols = ["image_id", "fmt", "phash", "host_bucket"]
+    a = pruned_corpus_arrow(spark, layout_dir, host_ids=h_ids)
+    j = pruned_corpus(spark, layout_dir, hosts=set(h_ids), ids=ids)
+    assert _sorted_rows(a.select(*cols)) == _sorted_rows(j.select(*cols))
+    # the schema is interchangeable with the JVM layout scan
+    assert a.schema == spark.read.parquet(layout_dir).schema
+    # end-to-end value proof against the un-laid-out source of truth
     flat = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
-    got = pruned_corpus_arrow(spark, layout_dir, ids=ids).select(
-        "image_id", "fmt", "phash"
-    )
     want = flat.filter(F.col("image_id").isin(sorted(ids))).select(
         "image_id", "fmt", "phash"
     )
-    assert _sorted_rows(got) == _sorted_rows(want)
+    assert _sorted_rows(a.select("image_id", "fmt", "phash")) == (
+        _sorted_rows(want)
+    )
 
 
-def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir):
-    """Engine planning (r6): a schedule whose id set exceeds
-    ID_PUSHDOWN_CAP but fits the arrow cap plans the set-based scan —
-    full host AND id sets, no Or-tree, no split."""
+def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir,
+                                        monkeypatch):
+    """Engine planning: with a layout, a schedule of at most
+    ARROW_PUSHDOWN_CAP rows plans the host-scoped arrow scan from one
+    (host → ids) collect; above the cap the fetch join reads the layout
+    with bucket pruning only and pushes no host or id list."""
     from ccrawler_spark.conf import CrawlConf
+    from ccrawler_spark.io import arrow_scan
     from ccrawler_spark.scheduler.cli import make_engine
 
     out = tempfile.mkdtemp(prefix="arrowplan-")
@@ -390,40 +295,72 @@ def test_sched_metadata_plans_arrow_scan(spark, tiny_fixtures, layout_dir):
         [(f"h{i % 100}.example", f"{i:016x}", i % 64) for i in range(4200)],
         "host string, image_id string, host_bucket int",
     )
-    counts, push = engine._sched_metadata(sched)
+    counts, host_ids = engine._sched_metadata(sched)
     assert sum(counts.values()) == 4200
-    assert push is not None and push.get("arrow") is True
-    assert len(push["ids"]) == 4200 and len(push["hosts"]) == 100
-    # the host-scoped pairing rides along for admits_scoped
-    assert set(push["host_ids"]) == push["hosts"]
-    assert sum(len(v) for v in push["host_ids"].values()) == 4200
-    df = engine._corpus_side(counts, push)
+    assert len(host_ids) == 100
+    assert sum(len(v) for v in host_ids.values()) == 4200
+    df = engine._corpus_side(counts, host_ids)
     assert "image_id" in df.columns and "host_bucket" in df.columns
-    # above the arrow cap the plan falls back to the JVM host-only path
-    engine.arrow_pushdown_cap = 4100
-    _, push2 = engine._sched_metadata(sched)
-    assert push2 is not None and not push2.get("arrow")
+    # above the arrow cap: bucket pruning only
+    monkeypatch.setattr(arrow_scan, "ARROW_PUSHDOWN_CAP", 4100)
+    counts2, host_ids2 = engine._sched_metadata(sched)
+    assert counts2 == counts and host_ids2 is None
+    plan = engine._corpus_side(counts2, None)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "host_bucket" in plan
+    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    assert "host_key" not in pushed and "image_id" not in pushed
 
 
-def test_engine_parity_arrow_path(spark, tiny_fixtures, layout_dir,
-                                  monkeypatch):
-    """End-to-end byte equality through the arrow fetch path: shrink
-    ID_PUSHDOWN_CAP so every round's schedule overflows the JVM cap and
-    routes through pruned_corpus_arrow, then compare fetch_log and
-    frontier against the flat-corpus run."""
-    from ccrawler_spark.io import corpus_layout as cl
+def test_large_id_schedule_reads_exact_rows(spark, tiny_fixtures,
+                                            layout_dir):
+    """Regression (drain benchmark, round 4): a small-round schedule of
+    3,741 ids — every tiny-universe id plus phantom ids. Pushed as one
+    image_id IN list, its parquet Or tree overflowed the JVM stack
+    (StackOverflowError from 2,611 ids) in sessions that push IN lists
+    as exact value sets. Through _sched_metadata → _corpus_side it must
+    read exactly the flat corpus rows of those ids."""
+    from ccrawler_spark.conf import CrawlConf
+    from ccrawler_spark.fixtures.gen import universe_urls_df
+    from ccrawler_spark.functions.spark_exprs import host_bucket, image_id_of
+    from ccrawler_spark.scheduler.cli import make_engine
 
-    monkeypatch.setattr(cl, "ID_PUSHDOWN_CAP", 4)
-    s_flat = _run(spark, tiny_fixtures)
-    s_arrow = _run(spark, tiny_fixtures, corpus_layout=layout_dir)
-    n = s_flat.latest()
-    assert s_arrow.latest() == n
-    assert _sorted_rows(s_flat.read_fetch_log(n)) == _sorted_rows(
-        s_arrow.read_fetch_log(n)
+    real = [
+        tuple(r) for r in universe_urls_df(spark, str(tiny_fixtures)).select(
+            "host", image_id_of(F.col("url")).alias("image_id"),
+            host_bucket(F.col("host"), 64).alias("host_bucket"),
+        ).collect()
+    ]
+    host_buckets = sorted({(h, b) for h, _, b in real})
+    rows = list(real)
+    for i in range(3741 - len(real)):  # phantom ids on real hosts
+        h, b = host_buckets[i % len(host_buckets)]
+        rows.append((h, f"ffff{i:012x}", b))
+    sched = spark.createDataFrame(
+        rows, "host string, image_id string, host_bucket int"
     )
-    assert _sorted_rows(s_flat.read_frontier(n)) == _sorted_rows(
-        s_arrow.read_frontier(n)
+    out = tempfile.mkdtemp(prefix="large-ids-")
+    engine, _ = make_engine(spark, str(tiny_fixtures), out,
+                            conf=CrawlConf(round_budget=4096),
+                            corpus_layout=layout_dir)
+    key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        counts, host_ids = engine._sched_metadata(sched)
+        got = _sorted_rows(engine._corpus_side(counts, host_ids).select(
+            "image_id", "fmt", "phash"
+        ))
+    finally:
+        spark.conf.set(key, prev)
+    ids = {i for _, i, _ in rows}
+    flat = spark.read.parquet(f"{tiny_fixtures}/corpus.parquet")
+    want = sorted(
+        tuple(r) for r in flat.select("image_id", "fmt", "phash").collect()
+        if r["image_id"] in ids
     )
+    assert len(rows) >= 2611 and want
+    assert got == want
 
 
 def test_arrow_scan_soundness_randomized(spark, tiny_fixtures, layout_dir):

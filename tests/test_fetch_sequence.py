@@ -77,10 +77,11 @@ def test_small_budget_branch_identical(sched_df):
     the seq the group prefix-sum assigns, row for row (the engine
     switches plans on conf.round_budget, never values)."""
     sub = sched_df.filter(F.pmod("url_hash", F.lit(79)) == 0)  # ~2.5k rows
-    a = stages.with_fetch_sequence(sub, 1, 7).select("url", "seq")
-    b = stages.with_fetch_sequence(sub, 1, 7, small_budget=True).select(
-        "url", F.col("seq").alias("seq_b")
-    )
+    full_a = stages.with_fetch_sequence(sub, 1, 7)
+    full_b = stages.with_fetch_sequence(sub, 1, 7, small_budget=True)
+    assert full_a.columns == full_b.columns
+    a = full_a.select("url", "seq")
+    b = full_b.select("url", F.col("seq").alias("seq_b"))
     diff = a.join(b, on="url").filter(F.col("seq") != F.col("seq_b")).count()
     assert diff == 0
     assert a.count() == b.count()
